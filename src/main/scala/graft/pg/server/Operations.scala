@@ -45,7 +45,15 @@ object Operation {
   private[server] def parseTimeoutMs(v: String): Long = graft.pg.PgGuc.parseMs(v)
 }
 
-final class Operation(val session: PgSession, val statement: String) {
+/** One run of a statement under its own Spark job group. This is the one
+  * choke point for the statement counters: `statements_run` counts each
+  * statement once (a `resumed` run continues one counted earlier: a
+  * suspended portal's next Execute, a COPY FROM STDIN's CopyDone),
+  * `statements_failed` every run that throws, and `rows_streamed` the
+  * DataRow/CopyData rows the body reports through [[sent]].
+  */
+final class Operation(val session: PgSession, val statement: String,
+    resumed: Boolean = false) {
   private val state = new AtomicReference[OpState.Value](OpState.Initialized)
   val jobGroup: String = session.nextJobGroup()
   @volatile var startedAt: Long = 0L
@@ -54,8 +62,13 @@ final class Operation(val session: PgSession, val statement: String) {
 
   private val timedOut = new java.util.concurrent.atomic.AtomicBoolean(false)
 
+  private var rowsSent = 0L
+  /** report `n` more rows sent to the client as DataRow or CopyData */
+  def sent(n: Long): Unit = rowsSent += n
+
   /** Run `body` under this operation's job group with state tracking. */
   def run[T](body: => T): T = {
+    if (!resumed) ServerStats.statementsRun.incrementAndGet()
     state.set(OpState.Running)
     startedAt = System.currentTimeMillis()
     session.busy = true
@@ -85,6 +98,7 @@ final class Operation(val session: PgSession, val statement: String) {
       r
     } catch {
       case e: Throwable =>
+        ServerStats.statementsFailed.incrementAndGet()
         if (state.get() == OpState.Canceled) {
           if (timedOut.get()) {
             throw new StatementTimeoutException(
@@ -96,6 +110,7 @@ final class Operation(val session: PgSession, val statement: String) {
         throw e
     } finally {
       timer.foreach(_.cancel(false))
+      ServerStats.rowsStreamed.addAndGet(rowsSent)
       session.busy = false
       session.touch() // a just-finished statement resets the idle clock
       sc.setLocalProperty("spark.scheduler.pool", null)

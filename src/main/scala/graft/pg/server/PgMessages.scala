@@ -92,18 +92,6 @@ object PgMessages {
   def commandComplete(buf: ByteBuf, tag: String): Unit =
     msg(buf, 'C')(b => cstr(b, tag))
 
-  /** FunctionCallResponse 'V': int32 value length (-1 = NULL) then the value
-    * bytes in the requested result format (reference encodes this message at
-    * protocol.scala:143-150 but its 'F' handler never sends it).
-    */
-  def functionCallResponse(buf: ByteBuf, value: Option[Array[Byte]]): Unit =
-    msg(buf, 'V') { b =>
-      value match {
-        case Some(v) => b.writeInt(v.length); b.writeBytes(v)
-        case None => b.writeInt(-1)
-      }
-    }
-
   /** reference protocol.scala:171-200: name, table oid, attnum, type oid,
     * typlen, typmod, format code per column.
     */

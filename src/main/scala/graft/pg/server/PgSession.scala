@@ -5,13 +5,48 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable
 
+import graft.pg.wire.PgTypes
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructType}
 
-/** A named prepared statement ('P' message): unanalyzed plan + the schema
-  * captured eagerly so Describe can answer before Bind (reference
+/** What `prepare` classified a statement as: the one switch the wire
+  * server's statement lifecycle branches on, for both protocols.
+  */
+sealed trait StmtKind
+object StmtKind {
+  /** plain SQL through Spark: queries, commands, SET/SHOW, DDL and DML */
+  case object Sql extends StmtKind
+  /** EXPLAIN without ANALYZE: Spark never executes the explained query, so
+    * its analysis runs under `Internals.analysisOnly` and side-effecting
+    * functions (set_config, pg_notify) stay inert, as in PG
+    */
+  case object Explain extends StmtKind
+  /** EXPLAIN ANALYZE: `plan` is the INNER statement, executed at run time;
+    * the result is its ran plan with metrics as one QUERY PLAN column
+    */
+  case object ExplainAnalyze extends StmtKind
+  /** a catalog query over a relation this server has no feature for
+    * (pg_trigger, ...): zero rows, see PgCatalog.isFeatureAbsentQuery
+    */
+  case object FeatureAbsent extends StmtKind
+  /** the empty statement: EmptyQueryResponse instead of CommandComplete */
+  case object Empty extends StmtKind
+  final case class CopyOut(co: PgCopy.CopyOut) extends StmtKind
+  final case class CopyIn(ci: PgCopy.CopyIn) extends StmtKind
+  /** DEALLOCATE, DISCARD, DECLARE or CLOSE: `apply` changes the session
+    * state and returns the command tag
+    */
+  final case class SessionState(apply: () => String) extends StmtKind
+  /** SQL FETCH (emit) or MOVE: up to `count` rows of a cursor's portal */
+  final case class Fetch(cursor: String, count: Long, emit: Boolean) extends StmtKind
+}
+
+/** A prepared statement: a named one from 'P', or the unnamed one a simple
+  * Query runs. Holds the unanalyzed plan and, for 'P', the schema captured
+  * eagerly so Describe can answer before Bind (reference
   * protocol.scala:559-582, QueryState protocol.scala:994-1008).
   */
 final case class Prepared(
@@ -21,12 +56,7 @@ final case class Prepared(
     paramIds: Seq[Int],
     schema: StructType,
     paramOids: Seq[Int] = Seq.empty,
-    /** PG EXPLAIN ANALYZE prepared over the extended protocol (DBeaver's
-      * explain button, pgjdbc executeQuery): `plan` is the INNER statement,
-      * executed at Execute time with its plan+metrics streamed as the
-      * one-column QUERY PLAN result.
-      */
-    explainAnalyze: Boolean = false,
+    kind: StmtKind = StmtKind.Sql,
     /** Parse-time resolved plan for the cacheable path (pure query, no
       * params, no driver-folded session functions): consumed ONCE by the
       * first Bind so that Parse→Bind→Execute costs a single analysis.
@@ -39,23 +69,39 @@ final case class Prepared(
   def takeAnalyzed(): Option[LogicalPlan] = Option(freshAnalyzed.getAndSet(null))
 }
 
-/** A bound portal ('B'): statement + bound plan + result formats + the
-  * cursor position across Execute calls (reference PortalState
-  * protocol.scala:1010-1014, cursor fetch :437-504).
+/** A portal: statement + bound plan + requested result format codes + the
+  * cursor position across runs (reference PortalState
+  * protocol.scala:1010-1014, cursor fetch :437-504). Bind makes named and
+  * unnamed ones, DECLARE makes cursors, and a simple Query runs its
+  * statements through an unnamed text-format portal that is never stored.
   */
 final class Portal(
     val name: String,
     val stmt: Prepared,
     val bound: LogicalPlan,
-    val formats: Seq[Boolean]) {
+    /** Bind's result-format codes: none = all text, one = for every column,
+      * else per column
+      */
+    val formatCodes: Seq[Int] = Seq.empty) {
   var schema: StructType = stmt.schema
-  /** Dataset built from the Parse-time resolved plan (cacheable path):
-    * Execute runs THIS instance instead of re-analyzing `bound`.
+  /** per-column binary flags: binary only where asked for and the type has
+    * a binary encoding (strings always go as text)
+    */
+  def formats: Seq[Boolean] = schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+    val code = if (formatCodes.isEmpty) 0
+      else if (formatCodes.length == 1) formatCodes.head
+      else formatCodes(i)
+    code == 1 && PgTypes.binaryCapable(f.dataType) && f.dataType != StringType
+  }
+  /** the Dataset being run; set at Bind on the cacheable path, so the run
+    * reuses it instead of re-analyzing `bound`
     */
   var df: org.apache.spark.sql.DataFrame = _
   var rows: Iterator[InternalRow] = _
+  /** the open COPY FROM STDIN of a CopyIn portal */
+  var copyIn: PgCopy.CopyInSession = _
   var rowCount: Long = 0L
-  def started: Boolean = rows != null
+  def started: Boolean = rows != null || copyIn != null
 }
 
 /** Per-connection session: an isolated SparkSession (shared SparkContext,

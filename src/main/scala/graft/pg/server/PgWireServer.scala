@@ -17,12 +17,13 @@ import io.netty.channel.socket.SocketChannel
 import io.netty.channel.socket.nio.NioServerSocketChannel
 import io.netty.handler.codec.ByteToMessageDecoder
 import io.netty.handler.ssl.{SslContext, SslContextBuilder}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{functions, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, OneRowRelation}
 import org.apache.spark.sql.graft.Internals
-import org.apache.spark.sql.types.{NullType, StringType, StructType}
+import org.apache.spark.sql.types.{NullType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** PostgreSQL V3 wire-protocol server over Spark SQL: the reference's
   * raison d'être (protocol.scala:59-65), rebuilt on public Spark 4 APIs.
@@ -379,8 +380,10 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     * P/B/D/E/S in one write) see exactly one ErrorResponse then ReadyForQuery
     */
   private var inError = false
-  /** active COPY FROM STDIN operation, if any ('d'/'c'/'f' route here) */
-  private var copyIn: Option[PgCopy.CopyInSession] = None
+  /** the portal of the open COPY FROM STDIN, if any ('d'/'c'/'f' route
+    * here); null otherwise
+    */
+  private var copyIn: Portal = _
 
   override def channelRead0(ctx: ChannelHandlerContext, m: PgClientMsg): Unit = m match {
     case SslRequest => sslCtx match {
@@ -595,11 +598,12 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
       }
       catch {
         case NonFatal(e) =>
-          ServerStats.statementsFailed.incrementAndGet()
           errorResponse(currentOut, Option(e.getMessage).getOrElse(e.toString),
             PgWireServer.sqlStateOf(e), PgWireServer.errorPosition(e))
-          if (t == 'Q') readyForQuery(currentOut)
-          else if (t != 'S' && t != 'X') inError = true
+          // an extended-flow frame skips the rest of its batch until Sync;
+          // every other message ends its cycle with ReadyForQuery
+          if ("PBDECHd".indexOf(t) >= 0) inError = true
+          else if (t != 'S' && t != 'X') readyForQuery(currentOut)
       }
       ctx.writeAndFlush(currentOut)
       currentOut = null
@@ -684,105 +688,76 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     case 'X' => () // Terminate; channel closed by caller
     // COPY subprotocol (reference decodes these then throws "Not supported
     // yet", protocol.scala:679-698 — here they work)
-    case 'd' => copyIn match {
-      case Some(ci) =>
-        val bytes = new Array[Byte](in.remaining()); in.get(bytes)
-        ci.feed(bytes)
-      case None =>
-        throw new UnsupportedOperationException("COPY data outside a COPY operation")
-    }
-    case 'c' => copyIn match {
-      case Some(ci) =>
-        copyIn = None
-        try {
-          val n = withOperation("COPY FROM STDIN")(ci.finish())
-          commandComplete(out, s"COPY $n")
-        } catch {
-          case NonFatal(e) =>
-            ServerStats.statementsFailed.incrementAndGet()
-            errorResponse(out, Option(e.getMessage).getOrElse(e.toString),
-              PgWireServer.sqlStateOf(e))
-        }
-        readyForQuery(out)
-      case None =>
-        throw new UnsupportedOperationException("CopyDone outside a COPY operation")
-    }
+    case 'd' =>
+      val bytes = new Array[Byte](in.remaining()); in.get(bytes)
+      openCopyIn("COPY data").copyIn.feed(bytes)
+    case 'c' => finishCopyIn(openCopyIn("CopyDone"))
     case 'f' =>
-      copyIn = None
+      val portal = openCopyIn("CopyFail")
       val reason = try readCStr(in) catch { case _: RuntimeException => "" }
-      errorResponse(out, s"COPY aborted by client: $reason", "57014")
-      readyForQuery(out)
-    case 'F' => functionCall(in, out)
+      portal.copyIn.failure =
+        Some(new PgStateException(s"COPY aborted by client: $reason", "57014"))
+      finishCopyIn(portal)
+    case 'F' => functionCall(in)
     case other =>
-      // a PG ErrorResponse + ReadyForQuery rather than an exception: an
-      // unknown type from a confused or hostile client must not wedge the
+      // a PG ErrorResponse + ReadyForQuery rather than a dropped connection:
+      // an unknown type from a confused or hostile client must not wedge the
       // connection — it gets a protocol error and can continue
-      ServerStats.statementsFailed.incrementAndGet()
-      errorResponse(out, s"unsupported frontend message type: '$other'", "08P01")
-      readyForQuery(out)
+      throw new PgStateException(s"unsupported frontend message type: '$other'", "08P01")
+  }
+
+  private def openCopyIn(what: String): Portal =
+    if (copyIn != null) copyIn
+    else throw new UnsupportedOperationException(s"$what outside a COPY operation")
+
+  /** CopyDone or CopyFail: the COPY FROM STDIN statement's closing run, then
+    * the ReadyForQuery its simple Query held back
+    */
+  private def finishCopyIn(portal: Portal): Unit = {
+    copyIn = null
+    run(portal.stmt.sql, 0, QueryRows, resumed = true)(portal)
+    readyForQuery(currentOut)
   }
 
   /** 'F' fastpath FunctionCall → 'V' FunctionCallResponse + ReadyForQuery
     * (a fastpath cycle ends with ReadyForQuery per the PG protocol). The
     * reference decodes this message then throws "Not supported yet"
     * (protocol.scala:506-533); here the OID resolves through the pg_proc
-    * fastpath registry and the call executes against the session's function
-    * registry. Errors answer ErrorResponse + ReadyForQuery — the connection
-    * survives either way.
+    * fastpath registry and the call runs as a one-row statement whose value
+    * goes out as the response. Errors answer ErrorResponse + ReadyForQuery —
+    * the connection survives either way.
     */
-  private def functionCall(in: ByteBuffer, out: ByteBuf): Unit = {
-    try {
-      val objId = in.getInt
-      val nFmts = in.getShort.toInt
-      val fmts = Array.fill(nFmts)(in.getShort.toInt)
-      val nParams = in.getShort.toInt
-      val params = Array.fill[Array[Byte]](nParams) {
-        val len = in.getInt
-        if (len < 0) null
-        else { val b = new Array[Byte](len); in.get(b); b }
-      }
-      val resultFormat = in.getShort.toInt
-      val (fname, argOids, _) = PgCatalog.fastpathByOid(objId).getOrElse(
-        throw new IllegalArgumentException(
-          s"fastpath function with OID $objId does not exist"))
-      if (nParams != argOids.length) {
-        throw new IllegalArgumentException(
-          s"fastpath function $fname expects ${argOids.length} arguments, got $nParams")
-      }
-      val lits = params.zip(argOids).zipWithIndex.map { case ((p, oid), i) =>
-        if (p == null) Literal(null, NullType)
-        else ParamCodec.decode(p, oid,
-          // 0 format codes = all text; 1 = that code for all; else per-arg
-          if (nFmts == 0) 0 else if (nFmts == 1) fmts(0) else fmts(i))
-      }
-      ServerStats.statementsRun.incrementAndGet()
-      val df = withOperation(s"fastpath $fname") {
-        session.spark.sql(s"SELECT $fname(${lits.map(_.sql).mkString(", ")})")
-      }
-      val row = Internals.executeCollect(df).head
-      if (row.isNullAt(0)) functionCallResponse(out, None)
-      else {
-        val fw = RowCodec.fieldWriter(df.schema.head.dataType, 0,
-          binary = resultFormat == 1, sessionZone)
-        val bb = ByteBuffer.allocate(1 << 16)
-        fw(row, bb)
-        bb.flip()
-        val len = bb.getInt
-        val bytes = new Array[Byte](len)
-        bb.get(bytes)
-        functionCallResponse(out, Some(bytes))
-      }
-      readyForQuery(out)
-    } catch {
-      case NonFatal(e) =>
-        ServerStats.statementsFailed.incrementAndGet()
-        val state = e match {
-          case _: IllegalArgumentException => "42883" // undefined_function
-          case _ => "XX000"
-        }
-        errorResponse(out, Option(e.getMessage).getOrElse(e.toString), state)
-        readyForQuery(out)
+  private def functionCall(in: ByteBuffer): Unit = {
+    val objId = in.getInt
+    val nFmts = in.getShort.toInt
+    val fmts = Array.fill(nFmts)(in.getShort.toInt)
+    val nParams = in.getShort.toInt
+    val params = Array.fill[Array[Byte]](nParams) {
+      val len = in.getInt
+      if (len < 0) null
+      else { val b = new Array[Byte](len); in.get(b); b }
     }
+    val resultFormat = in.getShort.toInt
+    val (fname, argOids, _) = PgCatalog.fastpathByOid(objId).getOrElse(
+      throw new PgStateException(
+        s"fastpath function with OID $objId does not exist", "42883"))
+    if (nParams != argOids.length) {
+      throw new PgStateException(
+        s"fastpath function $fname expects ${argOids.length} arguments, got $nParams",
+        "42883")
+    }
+    val lits = params.zip(argOids).zipWithIndex.map { case ((p, oid), i) =>
+      if (p == null) Literal(null, NullType)
+      else ParamCodec.decode(p, oid,
+        // 0 format codes = all text; 1 = that code for all; else per-arg
+        if (nFmts == 0) 0 else if (nFmts == 1) fmts(0) else fmts(i))
+    }
+    run(s"fastpath $fname", 0, new FastpathResult(resultFormat == 1)) {
+      val sql = s"SELECT $fname(${lits.map(_.sql).mkString(", ")})"
+      val plan = Internals.sessionParser(session.spark).parsePlan(sql)
+      new Portal("", Prepared("", sql, plan, Seq.empty, new StructType), plan)
+    }
+    readyForQuery(currentOut)
   }
 
   private def readCStr(b: ByteBuffer): String = {
@@ -804,9 +779,6 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     */
   private def parseSql(text: String): LogicalPlan =
     parser.parsePlan(graft.queries.CtePrune.prune(text))
-
-  private def splitStatements(sql: String): Seq[String] =
-    PgStatementSplitter.split(sql)
 
   /** The row count for a no-result command's tag: INSERT uses the write
     * node's output rows; UPDATE/DELETE/MERGE use operation-specific metrics
@@ -867,16 +839,11 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
             case _ => first
           }
         case "TRUNCATE" => "TRUNCATE TABLE"
-        case "" => "SELECT 0"
         case other => other
       }
     }
   }
 
-  /** Views whose contents change between statements (unlike the static
-    * pg_catalog snapshot): re-registered immediately before any statement
-    * that references them.
-    */
   /** Statements whose per-phase re-analysis is semantically load-bearing:
     * driver-folded session functions (set_config must fire its effect at
     * the Execute re-analysis, current_setting/version/pg_backend_pid must
@@ -893,6 +860,10 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
   private def isVolatileText(sql: String): Boolean =
     volatileTextRe.matches(sql)
 
+  /** Views whose contents change between statements (unlike the static
+    * pg_catalog snapshot): re-registered immediately before any statement
+    * that references them.
+    */
   private def refreshDynamicViews(sql: String): Unit = {
     val lower = sql.toLowerCase
     if (lower.contains("pg_stat_activity")) {
@@ -906,39 +877,30 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     }
   }
 
-  /** Simple query flow §3.1: parse -> execute -> RowDescription + DataRows +
-    * CommandComplete, always text format (reference protocol.scala:585-660).
+  // ---- the statement lifecycle: prepare, then run through a portal ----
+
+  /** Simple Query: each statement of the script is prepared and run through
+    * an unnamed, text-format portal that is never stored — PG's
+    * exec_simple_query does the same (reference protocol.scala:585-660).
+    * Preparing happens inside the run, so a statement that fails to parse
+    * is still one counted, failed statement.
     */
   private def simpleQuery(sql: String): Unit = {
-    val stmts = splitStatements(sql)
-    if (stmts.isEmpty) {
-      PgMessages.emptyQueryResponse(currentOut)
-      readyForQuery(currentOut)
-      return
+    val stmts = PgStatementSplitter.split(sql)
+    if (stmts.isEmpty) emptyQueryResponse(currentOut)
+    stmts.foreach { text =>
+      run(text, 0, QueryRows) {
+        val stmt = prepare("", text)
+        if (stmts.length > 1 && stmt.kind.isInstanceOf[StmtKind.CopyIn]) {
+          throw new IllegalArgumentException(
+            "COPY FROM STDIN must be the only statement in a simple query")
+        }
+        new Portal("", stmt, stmt.plan)
+      }
     }
-    var copyInStarted = false
-    stmts.foreach { stmt =>
-      refreshDynamicViews(stmt)
-      PgCopy.parse(stmt) match {
-      case Some(ci: PgCopy.CopyIn) =>
-        if (stmts.length > 1) throw new IllegalArgumentException(
-          "COPY FROM STDIN must be the only statement in a simple query")
-        // constructing the session resolves the table schema, so a missing
-        // table errors HERE — before CopyInResponse commits the connection
-        // to the copy subprotocol
-        val st = new PgCopy.CopyInSession(session.spark, ci, sessionZone)
-        copyIn = Some(st)
-        ServerStats.statementsRun.incrementAndGet()
-        PgMessages.copyInResponse(currentOut, st.nCols, ci.opts.binary)
-        copyInStarted = true
-      case Some(co: PgCopy.CopyOut) =>
-        ServerStats.statementsRun.incrementAndGet()
-        withOperation(stmt.take(80))(runCopyOut(co))
-      case None => runRegularStatement(stmt)
-    }}
     // after CopyInResponse the client streams 'd' frames; ReadyForQuery
     // only follows CopyDone/CopyFail
-    if (!copyInStarted) readyForQuery(currentOut)
+    if (copyIn == null) readyForQuery(currentOut)
   }
 
   /** `DEALLOCATE [PREPARE] (name|ALL)` — connection pools and drivers issue
@@ -953,18 +915,6 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     */
   private val discardRe =
     """(?is)\s*DISCARD\s+(ALL|PLANS|SEQUENCES|TEMP|TEMPORARY)\s*;?\s*""".r
-
-  /** DISCARD ALL/TEMP: drop every temp view, then re-register the
-    * pg_catalog / information_schema infrastructure views (idempotent) —
-    * what survives is exactly PG's picture, where DISCARD clears pg_temp
-    * but never the system catalogs.
-    */
-  private def discardTempState(): Unit = {
-    val cat = session.spark.catalog
-    cat.listTables().collect().filter(_.isTemporary)
-      .foreach(t => cat.dropTempView(t.name))
-    PgCatalog.register(session.spark)
-  }
 
   // ---- SQL-level cursors (DECLARE/FETCH/MOVE/CLOSE) ----
   // psql's FETCH_COUNT mode wraps every query in exactly this flow
@@ -984,125 +934,6 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     """(?is)\s*CLOSE\s+(ALL|"[^"]+"|[A-Za-z_]\w*)\s*;?\s*""".r
 
   private def cursorName(token: String): String = PgNotify.foldChannel(token)
-
-  private def declareCursor(name: String, binary: Boolean, query: String): Unit = {
-    if (session.portals.contains(name)) {
-      throw new PgStateException(s"""cursor "$name" already exists""", "42P03")
-    }
-    refreshDynamicViews(query)
-    val plan = parseSql(query)
-    val schema = Internals.analyzedSchema(session.spark, plan)
-    val formats = schema.fields.map(f =>
-      binary && PgTypes.binaryCapable(f.dataType) && f.dataType != StringType).toSeq
-    val portal = new Portal(name, Prepared(name, query, plan, Seq.empty, schema),
-      plan, formats)
-    portal.schema = schema
-    session.portals(name) = portal
-    commandComplete(currentOut, "DECLARE CURSOR")
-  }
-
-  /** FETCH streams up to `count` rows (-1 = ALL) with a RowDescription, as
-    * the simple protocol requires; MOVE advances the same iterator silently.
-    * Rows pull through the incremental iterator partition by partition.
-    */
-  private def fetchFromCursor(name: String, count: Long, emit: Boolean): Unit = {
-    val portal = session.portals.getOrElse(name,
-      throw new PgStateException(s"""cursor "$name" does not exist""", "34000"))
-    withOperation(s"FETCH $name") {
-      if (!portal.started) {
-        portal.rows = resultIterator(Internals.ofRows(session.spark, portal.bound))
-      }
-      if (emit) rowDescription(currentOut, portal.schema, portal.formats)
-      val writer = RowCodec.rowWriter(portal.schema, portal.formats, sessionZone)
-      val scratch = new Scratch
-      var n = 0L
-      while (portal.rows.hasNext && (count < 0 || n < count)) {
-        val row = portal.rows.next()
-        if (emit) {
-          writeDataRow(currentOut, portal.schema.length, writer, row, scratch)
-          maybeFlush()
-        }
-        n += 1
-        portal.rowCount += 1
-      }
-      if (emit) ServerStats.rowsStreamed.addAndGet(n)
-      commandComplete(currentOut, s"${if (emit) "FETCH" else "MOVE"} $n")
-    }
-  }
-
-  /** Session-state statements with real server-side semantics (PG tags,
-    * PG SQLSTATEs); returns true when `stmt` was one of them.
-    */
-  private def runSessionStateStatement(stmt: String): Boolean = stmt match {
-    case deallocRe(what) =>
-      ServerStats.statementsRun.incrementAndGet()
-      // the ALL keyword only when unquoted — `DEALLOCATE "ALL"` targets a
-      // statement literally named ALL, like any quoted PG identifier
-      if (!what.startsWith("\"") && what.equalsIgnoreCase("ALL")) {
-        session.statements.clear()
-        session.portals.clear()
-        commandComplete(currentOut, "DEALLOCATE ALL")
-      } else {
-        val name =
-          if (what.startsWith("\"")) what.substring(1, what.length - 1)
-          else what.toLowerCase
-        if (session.statements.remove(name).isEmpty) {
-          throw new PgStateException(
-            s"""prepared statement "$name" does not exist""", "26000")
-        }
-        // drop portals bound from the deallocated statement too
-        session.portals.filterInPlace((_, p) => p.stmt.name != name)
-        commandComplete(currentOut, "DEALLOCATE")
-      }
-      true
-    case discardRe(what) =>
-      ServerStats.statementsRun.incrementAndGet()
-      val w = what.toUpperCase match { case "TEMPORARY" => "TEMP"; case x => x }
-      w match {
-        case "ALL" =>
-          session.statements.clear()
-          session.portals.clear()
-          discardTempState()
-          // PG's DISCARD ALL includes RESET ALL and UNLISTEN *
-          graft.pg.PgGuc.resetAll(session.spark)
-          PgNotify.unlistenAll(session.pid)
-        case "TEMP" => discardTempState()
-        case _ => () // PLANS/SEQUENCES: no cached plans or sequences exist
-      }
-      commandComplete(currentOut, s"DISCARD $w")
-      true
-    case declareCursorRe(nameTok, binary, query) =>
-      ServerStats.statementsRun.incrementAndGet()
-      declareCursor(cursorName(nameTok), binary != null, query)
-      true
-    case fetchRe(verb, direction, countTok, nameTok) =>
-      ServerStats.statementsRun.incrementAndGet()
-      if (direction != null && !direction.equalsIgnoreCase("FORWARD")) {
-        // cursors here are NO SCROLL (a distributed result has no cheap
-        // backward walk); PG raises the same state for backward fetches
-        throw new PgStateException("cursor can only scan forward", "55000")
-      }
-      val count =
-        if (countTok == null || countTok.equalsIgnoreCase("NEXT")) 1L
-        else if (countTok.equalsIgnoreCase("ALL")) -1L
-        else countTok.toLong
-      fetchFromCursor(cursorName(nameTok), count,
-        emit = verb.equalsIgnoreCase("FETCH"))
-      true
-    case closeCursorRe(nameTok) =>
-      ServerStats.statementsRun.incrementAndGet()
-      if (!nameTok.startsWith("\"") && nameTok.equalsIgnoreCase("ALL")) {
-        session.portals.clear() // PG's CLOSE ALL closes cursors and portals alike
-      } else {
-        val name = cursorName(nameTok)
-        if (session.portals.remove(name).isEmpty) {
-          throw new PgStateException(s"""cursor "$name" does not exist""", "34000")
-        }
-      }
-      commandComplete(currentOut, "CLOSE CURSOR")
-      true
-    case _ => false
-  }
 
   /** PG's `EXPLAIN ANALYZE` (and the `EXPLAIN (ANALYZE ...)` option form):
     * EXECUTE the statement, then report the plan that actually ran with its
@@ -1126,155 +957,193 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
   private val explainOptionsRe =
     """(?is)\s*EXPLAIN\s+\([^)]*\)\s+(.+)""".r
 
-  private val explainAnalyzeSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("QUERY PLAN", StringType)))
+  private val explainAnalyzeSchema = StructType(Seq(StructField("QUERY PLAN", StringType)))
+  private val featureAbsentSchema = StructType(Seq(StructField("v", StringType)))
 
-  /** Execute `bound` and render the ran plan + metrics as QUERY PLAN lines
-    * (shared by the simple-query and extended-protocol EXPLAIN ANALYZE
-    * paths; callers wrap in withOperation).
+  /** The lifecycle's first half, shared by simple Query and Parse: classify
+    * `text` once and parse what Spark will run. Nothing is analyzed here;
+    * the schema is filled in for the kinds whose result shape is fixed.
     */
-  private def explainAnalyzeLines(bound: LogicalPlan): Seq[String] =
-    runTrackingTimeZone {
-      val df = Internals.ofRows(session.spark, bound)
-      val t0 = System.nanoTime()
-      if (df.schema.nonEmpty) {
-        Internals.executeAndDiscard(df) // this plan instance, on-executor discard
-      } else {
-        df.collect() // commands execute eagerly; nothing to discard
+  private def prepare(name: String, text: String,
+      paramOids: Seq[Int] = Seq.empty): Prepared = {
+    refreshDynamicViews(text)
+    def of(kind: StmtKind, schema: StructType = new StructType,
+        plan: LogicalPlan = OneRowRelation()): Prepared =
+      Prepared(name, text, plan, PgDialect.collectParamIds(plan), schema, paramOids, kind)
+    def sql(sparkText: String): Prepared = {
+      val plan = parseSql(sparkText)
+      of(if (plan.getClass.getSimpleName == "ExplainCommand") StmtKind.Explain
+        else StmtKind.Sql, plan = plan)
+    }
+    if (text.trim.isEmpty) return of(StmtKind.Empty)
+    PgCopy.parse(text) match {
+      case Some(ci: PgCopy.CopyIn) => return of(StmtKind.CopyIn(ci))
+      case Some(co: PgCopy.CopyOut) => return of(StmtKind.CopyOut(co))
+      case None =>
+    }
+    text match {
+      case explainAnalyzeRe(inner) =>
+        of(StmtKind.ExplainAnalyze, explainAnalyzeSchema, parseSql(inner))
+      case explainOptionsRe(inner) => sql("EXPLAIN " + inner)
+      case deallocRe(what) => of(StmtKind.SessionState(() => deallocate(what)))
+      case discardRe(what) => of(StmtKind.SessionState(() => discard(what)))
+      case declareCursorRe(nameTok, binary, query) =>
+        val plan = parseSql(query)
+        of(StmtKind.SessionState(() =>
+          declareCursor(cursorName(nameTok), binary != null, query, plan)))
+      case fetchRe(verb, direction, countTok, nameTok) =>
+        if (direction != null && !direction.equalsIgnoreCase("FORWARD")) {
+          // cursors here are NO SCROLL (a distributed result has no cheap
+          // backward walk); PG raises the same state for backward fetches
+          throw new PgStateException("cursor can only scan forward", "55000")
+        }
+        val count =
+          if (countTok == null || countTok.equalsIgnoreCase("NEXT")) 1L
+          else if (countTok.equalsIgnoreCase("ALL")) Long.MaxValue
+          else countTok.toLong
+        val cursor = cursorName(nameTok)
+        val emit = verb.equalsIgnoreCase("FETCH")
+        of(StmtKind.Fetch(cursor, count, emit),
+          session.portals.get(cursor).filter(_ => emit).map(_.schema)
+            .getOrElse(new StructType))
+      case closeCursorRe(nameTok) => of(StmtKind.SessionState(() => closeCursor(nameTok)))
+      // zero rows for feature-absent catalog relations (see PgCatalog)
+      case _ if PgCatalog.isFeatureAbsentQuery(text) =>
+        of(StmtKind.FeatureAbsent, featureAbsentSchema)
+      case _ => sql(text)
+    }
+  }
+
+  /** Spark's SetCommand reports (key, value) rows, but PG's SET answers no
+    * rows, only its tag (reference protocol.scala:451-459,630-638)
+    */
+  private def resultSchema(stmt: Prepared, analyzed: StructType): StructType =
+    if (stmt.plan.getClass.getSimpleName == "SetCommand") new StructType else analyzed
+
+  private def deallocate(what: String): String =
+    // the ALL keyword only when unquoted — `DEALLOCATE "ALL"` targets a
+    // statement literally named ALL, like any quoted PG identifier
+    if (!what.startsWith("\"") && what.equalsIgnoreCase("ALL")) {
+      session.statements.clear()
+      session.portals.clear()
+      "DEALLOCATE ALL"
+    } else {
+      val name =
+        if (what.startsWith("\"")) what.substring(1, what.length - 1)
+        else what.toLowerCase
+      if (session.statements.remove(name).isEmpty) {
+        throw new PgStateException(
+          s"""prepared statement "$name" does not exist""", "26000")
       }
-      val wallMs = (System.nanoTime() - t0) / 1e6
-      Internals.executedPlanWithMetrics(df) :+ f"Execution Time: $wallMs%.3f ms"
+      // drop portals bound from the deallocated statement too
+      session.portals.filterInPlace((_, p) => p.stmt.name != name)
+      "DEALLOCATE"
     }
 
-  private def explainAnalyzeRows(lines: Seq[String]): Iterator[InternalRow] =
-    lines.iterator.map(l => org.apache.spark.sql.catalyst.InternalRow(
-      org.apache.spark.unsafe.types.UTF8String.fromString(l)))
-
-  private def runExplainAnalyze(inner: String): Unit = {
-    refreshDynamicViews(inner)
-    val plan = parseSql(inner)
-    ServerStats.statementsRun.incrementAndGet()
-    val lines = withOperation(inner.take(80)) { explainAnalyzeLines(plan) }
-    rowDescription(currentOut, explainAnalyzeSchema, Seq(false))
-    val writer = RowCodec.rowWriter(explainAnalyzeSchema, Seq(false), sessionZone)
-    val scratch = new Scratch
-    explainAnalyzeRows(lines).foreach(r =>
-      writeDataRow(currentOut, 1, writer, r, scratch))
-    commandComplete(currentOut, "EXPLAIN")
+  private def discard(what: String): String = {
+    val w = what.toUpperCase match { case "TEMPORARY" => "TEMP"; case x => x }
+    w match {
+      case "ALL" =>
+        session.statements.clear()
+        session.portals.clear()
+        discardTempState()
+        // PG's DISCARD ALL includes RESET ALL and UNLISTEN *
+        graft.pg.PgGuc.resetAll(session.spark)
+        PgNotify.unlistenAll(session.pid)
+      case "TEMP" => discardTempState()
+      case _ => () // PLANS/SEQUENCES: no cached plans or sequences exist
+    }
+    s"DISCARD $w"
   }
 
-  private def runRegularStatement(stmt: String): Unit = {
-      stmt match {
-        case explainAnalyzeRe(inner) => runExplainAnalyze(inner); return
-        case explainOptionsRe(inner) => runRegularStatement("EXPLAIN " + inner); return
-        case _ =>
-      }
-      if (runSessionStateStatement(stmt)) return
-      if (PgCatalog.isFeatureAbsentQuery(stmt)) {
-        // zero rows for feature-absent catalog relations (see PgCatalog)
-        val schema = StructType(Seq(org.apache.spark.sql.types.StructField(
-          "v", StringType)))
-        rowDescription(currentOut, schema, Seq(false))
-        commandComplete(currentOut, "SELECT 0")
-        return
-      }
-      val plan = parseSql(stmt)
-      ServerStats.statementsRun.incrementAndGet()
-      // Spark's EXPLAIN never executes the explained query, so statement
-      // side effects resolving during its inner analysis (set_config,
-      // pg_notify) must stay inert — PG fires them only under EXPLAIN
-      // ANALYZE, which Spark has no equivalent of
-      val isExplain = plan.getClass.getSimpleName == "ExplainCommand"
-      def guarded[T](body: => T): T =
-        if (isExplain) Internals.analysisOnly(body) else body
-      withOperation(stmt.take(80)) { guarded { runTrackingTimeZone {
-        // commands (incl. SetCommand) execute EAGERLY inside ofRows, so the
-        // time-zone tracking must bracket the Dataset construction too
-        val df = Internals.ofRows(session.spark, plan)
-        val schema = df.schema
-        val isSet = plan.getClass.getSimpleName == "SetCommand"
-        if (isSet) {
-          // reference short-circuits SET: apply but emit no rows, tag SET
-          // (protocol.scala:451-459,630-638)
-          df.collect()
-          commandComplete(currentOut, "SET")
-        } else if (schema.nonEmpty) {
-          val formats = Seq.fill(schema.length)(false) // psql simple mode = text
-          rowDescription(currentOut, schema, formats)
-          val n = streamRows(df, schema, formats, maxRows = 0)
-          commandComplete(currentOut, commandTag(stmt, plan, n))
-        } else {
-          df.collect() // run the command
-          // INSERT's tag carries the real written-row count in PG
-          commandComplete(currentOut,
-            commandTag(stmt, plan, tagRows(stmt, df)))
-        }
-      }}}
+  /** DISCARD ALL/TEMP: drop every temp view, then re-register the
+    * pg_catalog / information_schema infrastructure views (idempotent) —
+    * what survives is exactly PG's picture, where DISCARD clears pg_temp
+    * but never the system catalogs.
+    */
+  private def discardTempState(): Unit = {
+    val cat = session.spark.catalog
+    cat.listTables().collect().filter(_.isTemporary)
+      .foreach(t => cat.dropTempView(t.name))
+    PgCatalog.register(session.spark)
   }
 
-  /** 'P': parse + eager analysis so Describe can answer (reference
-    * protocol.scala:559-582).
+  /** A cursor is a portal under its SQL name; FETCH and MOVE run it. */
+  private def declareCursor(name: String, binary: Boolean, query: String,
+      plan: LogicalPlan): String = {
+    if (session.portals.contains(name)) {
+      throw new PgStateException(s"""cursor "$name" already exists""", "42P03")
+    }
+    val schema = Internals.analyzedSchema(session.spark, plan)
+    session.portals(name) = new Portal(name,
+      Prepared(name, query, plan, Seq.empty, schema), plan,
+      if (binary) Seq(1) else Seq.empty)
+    "DECLARE CURSOR"
+  }
+
+  private def closeCursor(nameTok: String): String = {
+    if (!nameTok.startsWith("\"") && nameTok.equalsIgnoreCase("ALL")) {
+      session.portals.clear() // PG's CLOSE ALL closes cursors and portals alike
+    } else {
+      val name = cursorName(nameTok)
+      if (session.portals.remove(name).isEmpty) {
+        throw new PgStateException(s"""cursor "$name" does not exist""", "34000")
+      }
+    }
+    "CLOSE CURSOR"
+  }
+
+  /** 'P': prepare + eager analysis so Describe can answer (reference
+    * protocol.scala:559-582). COPY FROM STDIN needs the simple protocol's
+    * CopyInResponse hand-off, so it is refused here with 0A000.
     */
   private def parse(in: ByteBuffer, out: ByteBuf): Unit = {
     val name = readCStr(in)
     val sql = readCStr(in)
     val nParams = in.getShort.toInt
     val declaredOids = (0 until nParams).map(_ => in.getInt)
-    refreshDynamicViews(sql)
     PgDialect.registerParamFunction(session.spark)
-    // the empty statement is legal in the extended protocol (pgjdbc's
-    // isValid() runs it): Parse succeeds, Execute answers EmptyQueryResponse
-    // EXPLAIN ANALYZE prepares over the extended protocol too (DBeaver's
-    // explain action, pgjdbc executeQuery): prepare the INNER statement,
-    // Describe answers the one-column QUERY PLAN schema, Execute runs it
-    val (effectiveSql, isExplainAnalyze) = sql match {
-      case explainAnalyzeRe(inner) => (inner, true)
-      case explainOptionsRe(inner) => ("EXPLAIN " + inner, false)
-      case _ => (sql, false)
+    val stmt = prepare(name, sql, declaredOids)
+    session.statements(name) = stmt.kind match {
+      case StmtKind.CopyIn(_) => throw new PgStateException(
+        "COPY FROM STDIN is supported only through a simple Query", "0A000")
+      case StmtKind.Sql | StmtKind.Explain | StmtKind.ExplainAnalyze =>
+        analyzeForDescribe(stmt)
+      case _ => stmt
     }
-    val plan =
-      if (sql.trim.isEmpty) org.apache.spark.sql.catalyst.plans.logical.OneRowRelation()
-      else parseSql(effectiveSql)
-    // PgDialect.collectParamIds: also reaches `$n` inside CTE bodies
-    // (UnresolvedWith keeps them in innerChildren, invisible to a plain
-    // plan.collect) and inside subquery expressions
-    val paramIds = graft.pg.PgDialect.collectParamIds(plan)
-    // One-analysis path for the common case: a pure parameterless query
-    // free of session-volatile constructs is analyzed HERE once and the
-    // resolved plan handed to the first Bind→Execute lifecycle (PG likewise
-    // fixes the plan no later than Bind). Everything else — params, EXPLAIN
-    // ANALYZE, commands, session-volatile texts — keeps the
-    // analyze-per-phase flow whose re-analysis timing is load-bearing.
-    val cacheablePath = paramIds.isEmpty && !isExplainAnalyze &&
-      sql.trim.nonEmpty && !isVolatileText(sql)
-    var cachedAnalyzed: Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = None
-    val innerSchema =
-      if (sql.trim.isEmpty) new StructType()
-      else if (cacheablePath) {
-        val (s, analyzed) = Internals.analyzeForPrepare(session.spark, plan)
-        cachedAnalyzed = analyzed
-        s
-      }
-      else try Internals.analyzedSchema(session.spark, plan)
+    parseComplete(out)
+  }
+
+  /** Parse's analysis. One-analysis path for the common case: a pure
+    * parameterless query free of session-volatile constructs is analyzed
+    * HERE once and the resolved plan handed to the first Bind→Execute
+    * lifecycle (PG likewise fixes the plan no later than Bind). Everything
+    * else — params, EXPLAIN ANALYZE, commands, session-volatile texts —
+    * keeps the analyze-per-phase flow whose re-analysis timing is
+    * load-bearing. EXPLAIN ANALYZE validates its inner statement here; its
+    * result is the plan text.
+    */
+  private def analyzeForDescribe(stmt: Prepared): Prepared = {
+    val explainAnalyze = stmt.kind == StmtKind.ExplainAnalyze
+    if (stmt.paramIds.isEmpty && !explainAnalyze && !isVolatileText(stmt.sql)) {
+      val (schema, analyzed) = Internals.analyzeForPrepare(session.spark, stmt.plan)
+      stmt.copy(schema = resultSchema(stmt, schema), cachedAnalyzed = analyzed)
+    } else {
+      val schema = try Internals.analyzedSchema(session.spark, stmt.plan)
       catch {
-        case NonFatal(e) if paramIds.nonEmpty =>
+        case NonFatal(e) if stmt.paramIds.nonEmpty =>
           // a placeholder in an eagerly-evaluated position — pgjdbc's batch
           // INSERT ... VALUES ($1, $2) hits Spark's inline-table evaluation
           // at analysis. PG prepares these fine; analyze with NULL stand-ins
           // purely for the Describe schema (Bind substitutes real values and
           // re-analyzes from the ORIGINAL placeholder plan)
-          val nulls: Map[Int, Any] = paramIds.map(id => id ->
-            org.apache.spark.sql.catalyst.expressions.Literal(null,
-              org.apache.spark.sql.types.NullType)).toMap
-          try Internals.analyzedSchema(session.spark, PgDialect.bind(plan, nulls))
+          val nulls: Map[Int, Any] =
+            stmt.paramIds.map(id => id -> Literal(null, NullType)).toMap
+          try Internals.analyzedSchema(session.spark, PgDialect.bind(stmt.plan, nulls))
           catch { case NonFatal(_) => throw e }
       }
-    // EA validated the inner statement above; its RESULT is the plan text
-    val schema = if (isExplainAnalyze) explainAnalyzeSchema else innerSchema
-    session.statements(name) = Prepared(name, sql, plan, paramIds, schema,
-      declaredOids, explainAnalyze = isExplainAnalyze,
-      cachedAnalyzed = cachedAnalyzed)
-    parseComplete(out)
+      if (explainAnalyze) stmt else stmt.copy(schema = resultSchema(stmt, schema))
+    }
   }
 
   /** 'B': decode params by (oid,format), substitute, re-analyze, build the
@@ -1314,26 +1183,22 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
         }
       (i + 1) -> value
     }.toMap[Int, Any]
-    val bound = PgDialect.bind(stmt.plan, litParams)
-    // cacheable path: reuse the Parse-time resolved plan (one-shot) — the
-    // Dataset built here is the instance Execute runs, so the whole
-    // lifecycle costs a single analysis
-    val cachedDf = if (litParams.isEmpty && !stmt.explainAnalyze) {
-      stmt.takeAnalyzed().map(a => Internals.ofRows(session.spark, a))
-    } else None
-    val schema = if (stmt.sql.trim.isEmpty) new StructType()
-      else if (stmt.explainAnalyze) explainAnalyzeSchema // result = plan text
-      else cachedDf.map(_.schema)
-        .getOrElse(Internals.analyzedSchema(session.spark, bound))
-    val formats = schema.fields.zipWithIndex.map { case (f, i) =>
-      val want = if (resFormats.isEmpty) 0
-        else if (resFormats.length == 1) resFormats.head
-        else resFormats(i)
-      want == 1 && PgTypes.binaryCapable(f.dataType) && f.dataType != StringType
-    }.toSeq
-    val portal = new Portal(portalName, stmt, bound, formats)
-    portal.schema = schema
-    cachedDf.foreach(portal.df = _)
+    val portal = new Portal(portalName, stmt, PgDialect.bind(stmt.plan, litParams), resFormats)
+    stmt.kind match {
+      case StmtKind.Sql | StmtKind.Explain =>
+        // cacheable path: reuse the Parse-time resolved plan (one-shot) — the
+        // Dataset built here is the instance Execute runs, so the whole
+        // lifecycle costs a single analysis
+        if (litParams.isEmpty) {
+          stmt.takeAnalyzed().foreach(a => portal.df = Internals.ofRows(session.spark, a))
+        }
+        portal.schema = resultSchema(stmt,
+          if (portal.df != null) portal.df.schema
+          else Internals.analyzedSchema(session.spark, portal.bound))
+      case StmtKind.Fetch(cursor, _, true) =>
+        session.portals.get(cursor).foreach(c => portal.schema = c.schema)
+      case _ =>
+    }
     session.portals(portalName) = portal
     bindComplete(out)
   }
@@ -1363,64 +1228,18 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     }
   }
 
-  /** 'E': run or resume the portal cursor; maxRows==0 drains, otherwise
-    * suspend after maxRows (reference protocol.scala:437-504).
+  /** 'E': run or resume the portal; maxRows==0 drains, otherwise suspend
+    * after maxRows (reference protocol.scala:437-504).
     */
   private def execute(in: ByteBuffer): Unit = {
     val name = readCStr(in)
     val maxRows = in.getInt
     val portal = session.portals.getOrElse(name,
-      throw new PgStateException(
-            s"""portal "$name" does not exist""", "34000"))
-    if (!portal.started) ServerStats.statementsRun.incrementAndGet()
-    if (portal.stmt.sql.trim.isEmpty) {
-      // PG §55.2.3: executing the empty statement yields EmptyQueryResponse
-      // in place of CommandComplete
-      PgMessages.emptyQueryResponse(currentOut)
-      return
-    }
-    if (portal.schema.isEmpty) {
-      val written = withOperation(portal.stmt.sql.take(80)) {
-        runTrackingTimeZone {
-          val df = Internals.ofRows(session.spark, portal.bound)
-          df.collect()
-          tagRows(portal.stmt.sql, df)
-        }
-      }
-      commandComplete(currentOut, commandTag(portal.stmt.sql, portal.bound, written))
-      return
-    }
-    val writer = RowCodec.rowWriter(portal.schema, portal.formats, sessionZone)
-    val scratch = new Scratch
-    var n = 0L
-    var suspended = false
-    withOperation(portal.stmt.sql.take(80)) {
-      if (!portal.started) {
-        portal.rows =
-          if (portal.stmt.explainAnalyze) {
-            explainAnalyzeRows(explainAnalyzeLines(portal.bound))
-          } else if (portal.df != null) {
-            // cacheable path: run the Bind-time Dataset — no re-analysis
-            resultIterator(portal.df)
-          } else {
-            resultIterator(Internals.ofRows(session.spark, portal.bound))
-          }
-      }
-      while (portal.rows.hasNext && !suspended) {
-        writeDataRow(currentOut, portal.schema.length, writer, portal.rows.next(), scratch)
-        maybeFlush()
-        n += 1
-        portal.rowCount += 1
-        if (maxRows > 0 && n >= maxRows && portal.rows.hasNext) suspended = true
-      }
-    }
-    ServerStats.rowsStreamed.addAndGet(n)
-    if (suspended) portalSuspended(currentOut)
-    else if (portal.stmt.sql.trim.toUpperCase.startsWith("FETCH")) {
-      commandComplete(currentOut, s"FETCH ${portal.rowCount}")
-    } else {
-      commandComplete(currentOut, commandTag(portal.stmt.sql, portal.bound, portal.rowCount))
-    }
+      throw new PgStateException(s"""portal "$name" does not exist""", "34000"))
+    // PG §55.2.3: executing the empty statement yields EmptyQueryResponse
+    // in place of CommandComplete
+    if (portal.stmt.kind == StmtKind.Empty) emptyQueryResponse(currentOut)
+    else run(portal.stmt.sql, maxRows, ExecuteRows, resumed = portal.started)(portal)
   }
 
   /** 'C': free a statement or portal (reference protocol.scala:381-396). */
@@ -1435,104 +1254,215 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     closeComplete(out)
   }
 
+  /** The lifecycle's second half and the only code that runs a statement.
+    * It opens the statement's [[Operation]] (job group, cancellation,
+    * statement_timeout, statement counters), announces a changed session
+    * time zone, starts the portal on its first run, streams up to `maxRows`
+    * rows (0 = all) through `enc` and picks the command tag. The portal is
+    * opened inside the Operation, so a statement that fails while being
+    * prepared counts like any other failed statement.
+    */
+  private def run(label: String, maxRows: Int, enc: Encoder,
+      resumed: Boolean = false)(open: => Portal): Unit = {
+    val op = new Operation(session, label.take(80), resumed)
+    op.run { runTrackingTimeZone {
+      val portal = open
+      val stmt = portal.stmt
+      stmt.kind match {
+        case StmtKind.SessionState(apply) => commandComplete(currentOut, apply())
+        case StmtKind.CopyIn(ci) =>
+          if (portal.copyIn == null) {
+            // constructing the session resolves the table schema, so a
+            // missing table errors HERE — before CopyInResponse commits the
+            // connection to the copy subprotocol
+            portal.copyIn = new PgCopy.CopyInSession(session.spark, ci, sessionZone)
+            copyInResponse(currentOut, portal.copyIn.nCols, ci.opts.binary)
+            copyIn = portal
+          } else commandComplete(currentOut, s"COPY ${portal.copyIn.finish()}")
+        case kind =>
+          // SQL FETCH/MOVE run the cursor's portal, up to their own count
+          val (src, limit, emit) = kind match {
+            case StmtKind.Fetch(cursor, count, emit) =>
+              (session.portals.getOrElse(cursor,
+                throw new PgStateException(s"""cursor "$cursor" does not exist""", "34000")),
+                count, emit)
+            case _ => (portal, if (maxRows > 0) maxRows.toLong else Long.MaxValue, true)
+          }
+          if (!src.started) start(src)
+          val encoder = kind match {
+            case StmtKind.CopyOut(co) => new CopyRows(co.opts)
+            case _ => enc
+          }
+          val frames = if (emit) encoder.begin(portal, src) else null
+          var n = 0L
+          while (n < limit && src.rows.hasNext) {
+            val row = src.rows.next()
+            if (frames != null) {
+              frames.write(currentOut, row)
+              maybeFlush()
+            }
+            n += 1
+          }
+          src.rowCount += n
+          if (frames != null && encoder.streams) op.sent(n)
+          kind match {
+            case _: StmtKind.Fetch =>
+              encoder.end(s"${if (emit) "FETCH" else "MOVE"} $n")
+            case StmtKind.CopyOut(_) => encoder.end(s"COPY $n")
+            case _ if n == limit && src.rows.hasNext => portalSuspended(currentOut)
+            case _ => encoder.end(commandTag(stmt.sql, src.bound,
+              if (src.schema.isEmpty) tagRows(stmt.sql, src.df) else src.rowCount))
+          }
+      }
+    }}
+  }
+
+  /** A portal's first run: analysis (unless Bind left a Dataset) and job
+    * launch. Commands execute here, eagerly, as Spark runs them when their
+    * Dataset is built.
+    */
+  private def start(portal: Portal): Unit = {
+    val stmt = portal.stmt
+    portal.rows = stmt.kind match {
+      case StmtKind.ExplainAnalyze => explainAnalyzeRows(portal.bound)
+      case StmtKind.FeatureAbsent => Iterator.empty
+      case StmtKind.CopyOut(co) =>
+        val spark = session.spark
+        val base = co.source match {
+          case Left(table) => spark.table(table)
+          case Right(q) => spark.sql(q)
+        }
+        val df =
+          if (co.cols.nonEmpty) base.select(co.cols.map(functions.col).toIndexedSeq: _*)
+          else base
+        portal.schema = df.schema
+        resultIterator(df)
+      case kind =>
+        if (portal.df == null) {
+          portal.df =
+            if (kind == StmtKind.Explain) {
+              Internals.analysisOnly(Internals.ofRows(session.spark, portal.bound))
+            } else Internals.ofRows(session.spark, portal.bound)
+        }
+        portal.schema = resultSchema(stmt, portal.df.schema)
+        if (portal.schema.nonEmpty) resultIterator(portal.df)
+        else { portal.df.collect(); Iterator.empty } // run the command
+    }
+  }
+
+  /** Execute `bound` and render the ran plan + metrics as QUERY PLAN rows. */
+  private def explainAnalyzeRows(bound: LogicalPlan): Iterator[InternalRow] = {
+    val df = Internals.ofRows(session.spark, bound)
+    val t0 = System.nanoTime()
+    if (df.schema.nonEmpty) {
+      Internals.executeAndDiscard(df) // this plan instance, on-executor discard
+    } else {
+      df.collect() // commands execute eagerly; nothing to discard
+    }
+    val wallMs = (System.nanoTime() - t0) / 1e6
+    (Internals.executedPlanWithMetrics(df) :+ f"Execution Time: $wallMs%.3f ms")
+      .iterator.map(l => InternalRow(UTF8String.fromString(l)))
+  }
+
+  // ---- encoders: what a run sends around and for its rows ----
+
+  /** What one run sends besides its rows: the messages before them, the
+    * frame of each row, and what follows them.
+    */
+  private abstract class Encoder {
+    /** after the portal started and before the rows `src` yields for
+      * `portal`: sends any preamble and returns the row framer
+      */
+    def begin(portal: Portal, src: Portal): RowFrames
+    /** after the last row */
+    def end(tag: String): Unit = commandComplete(currentOut, tag)
+    /** rows framed here count as rows_streamed */
+    def streams: Boolean = true
+  }
+
+  /** Execute: Describe already announced the rows, in Bind's formats. */
+  private object ExecuteRows extends Encoder {
+    def begin(portal: Portal, src: Portal): RowFrames =
+      new RowFrames('D', portal.schema.length,
+        RowCodec.rowWriter(portal.schema, portal.formats, sessionZone))
+  }
+
+  /** Simple Query and SQL FETCH: RowDescription first, then the rows as
+    * text — unless they come from a BINARY cursor.
+    */
+  private object QueryRows extends Encoder {
+    def begin(portal: Portal, src: Portal): RowFrames = {
+      val formats = src.formats
+      if (src.schema.nonEmpty) rowDescription(currentOut, src.schema, formats)
+      new RowFrames('D', src.schema.length,
+        RowCodec.rowWriter(src.schema, formats, sessionZone))
+    }
+  }
+
+  /** COPY ... TO STDOUT: CopyOutResponse, one CopyData per row, CopyDone.
+    * Text and csv rows are PG copy-format lines; binary ones carry the
+    * PGCOPY signature header, per tuple the int16 field count + the SAME
+    * per-field binary encodings the DataRow writer emits (RowCodec is reused
+    * verbatim, numerics included), then the int16 -1 trailer.
+    */
+  private final class CopyRows(opts: PgCopy.CopyOptions) extends Encoder {
+    def begin(portal: Portal, src: Portal): RowFrames = {
+      val schema = src.schema
+      val zone = sessionZone
+      if (opts.binary) {
+        schema.fields.foreach { f =>
+          if (!PgTypes.binaryCapable(f.dataType) ||
+            f.dataType == org.apache.spark.sql.types.CalendarIntervalType) // no COPY recv path
+            throw new IllegalArgumentException(
+              s"COPY binary format unsupported for column type ${f.dataType}")
+        }
+        copyOutResponse(currentOut, schema.length, binary = true)
+        copyData(currentOut, PgCopy.BinaryCopy.header)
+        new RowFrames('d', schema.length,
+          RowCodec.rowWriter(schema, Seq.fill(schema.length)(true), zone))
+      } else {
+        copyOutResponse(currentOut, schema.length)
+        val fields = schema.fields.zipWithIndex.map { case (f, i) =>
+          PgCopy.fieldText(f.dataType, i, zone)
+        }
+        val delim = opts.delimiter
+        val sb = new StringBuilder
+        new RowFrames('d', -1, (row, buf) => {
+          sb.clear()
+          var i = 0
+          while (i < fields.length) {
+            if (i > 0) sb.append(delim)
+            if (row.isNullAt(i)) sb.append(if (opts.csv) opts.nullStr else "\\N")
+            else {
+              val v = fields(i)(row)
+              sb.append(if (opts.csv) PgCopy.escapeCsv(v, delim) else PgCopy.escapeText(v))
+            }
+            i += 1
+          }
+          sb.append('\n')
+          buf.put(sb.toString.getBytes(UTF_8))
+        })
+      }
+    }
+
+    override def end(tag: String): Unit = {
+      if (opts.binary) copyData(currentOut, PgCopy.BinaryCopy.Trailer)
+      copyDone(currentOut)
+      super.end(tag)
+    }
+  }
+
+  /** Fastpath: the call's one value as FunctionCallResponse ('V', the
+    * value's int32 length + bytes); no CommandComplete follows.
+    */
+  private final class FastpathResult(binary: Boolean) extends Encoder {
+    def begin(portal: Portal, src: Portal): RowFrames =
+      new RowFrames('V', -1, RowCodec.rowWriter(src.schema, Seq(binary), sessionZone))
+    override def end(tag: String): Unit = ()
+    override def streams: Boolean = false
+  }
+
   // ---- execution helpers ----
-
-  /** COPY ... TO STDOUT: CopyOutResponse, then rows in PG copy text/csv
-    * format streamed through the incremental iterator, CopyDone, COPY tag.
-    */
-  private def runCopyOut(co: PgCopy.CopyOut): Unit = {
-    val spark = session.spark
-    val base = co.source match {
-      case Left(table) => spark.table(table)
-      case Right(q) => spark.sql(q)
-    }
-    val df =
-      if (co.cols.nonEmpty)
-        base.select(co.cols.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
-      else base
-    val schema = df.schema
-    val zone = sessionZone
-    if (co.opts.binary) { runCopyOutBinary(df, schema, zone); return }
-    val fields = schema.fields.zipWithIndex.map { case (f, i) =>
-      PgCopy.fieldText(f.dataType, i, zone)
-    }
-    PgMessages.copyOutResponse(currentOut, schema.length)
-    val delim = co.opts.delimiter
-    val it = resultIterator(df)
-    var n = 0L
-    val sb = new StringBuilder
-    while (it.hasNext) {
-      val row = it.next()
-      sb.clear()
-      var i = 0
-      while (i < fields.length) {
-        if (i > 0) sb.append(delim)
-        if (row.isNullAt(i)) { if (!co.opts.csv) sb.append("\\N") else sb.append(co.opts.nullStr) }
-        else {
-          val v = fields(i)(row)
-          sb.append(if (co.opts.csv) PgCopy.escapeCsv(v, delim) else PgCopy.escapeText(v))
-        }
-        i += 1
-      }
-      sb.append('\n')
-      PgMessages.copyData(currentOut, sb.toString.getBytes(UTF_8))
-      maybeFlush()
-      n += 1
-    }
-    ServerStats.rowsStreamed.addAndGet(n)
-    PgMessages.copyDone(currentOut)
-    commandComplete(currentOut, s"COPY $n")
-  }
-
-  /** COPY ... TO STDOUT (FORMAT binary): the PGCOPY signature header, one
-    * CopyData per tuple (int16 field count + the SAME per-field binary
-    * encodings the DataRow writer emits — RowCodec is reused verbatim,
-    * numerics included), then the int16 -1 trailer. Streams through the
-    * incremental iterator with the grow-on-overflow scratch buffer, so
-    * memory stays bounded at any result size.
-    */
-  private def runCopyOutBinary(df: DataFrame, schema: StructType,
-      zone: java.time.ZoneId): Unit = {
-    schema.fields.foreach { f =>
-      if (!PgTypes.binaryCapable(f.dataType) ||
-        f.dataType == org.apache.spark.sql.types.CalendarIntervalType) // no COPY recv path
-        throw new IllegalArgumentException(
-          s"COPY binary format unsupported for column type ${f.dataType}")
-    }
-    val writer = RowCodec.rowWriter(schema,
-      Seq.fill(schema.length)(true), zone)
-    PgMessages.copyOutResponse(currentOut, schema.length, binary = true)
-    PgMessages.copyData(currentOut, PgCopy.BinaryCopy.header)
-    val scratch = new Scratch
-    val it = resultIterator(df)
-    var n = 0L
-    while (it.hasNext) {
-      val row = it.next()
-      var done = false
-      while (!done) {
-        val buf = scratch.buf
-        buf.clear()
-        try { buf.putShort(schema.length.toShort); writer(row, buf); done = true }
-        catch {
-          case _: java.nio.BufferOverflowException =>
-            if (buf.capacity() >= Scratch.MaxBytes) throw new IllegalStateException(
-              s"row exceeds the ${Scratch.MaxBytes} byte wire limit")
-            scratch.buf = java.nio.ByteBuffer.allocate(buf.capacity() * 2)
-        }
-      }
-      val buf = scratch.buf
-      buf.flip()
-      val tuple = new Array[Byte](buf.remaining())
-      buf.get(tuple)
-      PgMessages.copyData(currentOut, tuple)
-      maybeFlush()
-      n += 1
-    }
-    PgMessages.copyData(currentOut, PgCopy.BinaryCopy.Trailer)
-    ServerStats.rowsStreamed.addAndGet(n)
-    PgMessages.copyDone(currentOut)
-    commandComplete(currentOut, s"COPY $n")
-  }
 
   /** Run a command and, if it changed the session time zone, announce the
     * new value: PG emits ParameterStatus('TimeZone') on SET TimeZone, and
@@ -1544,16 +1474,9 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     val before = zone
     val r = body
     val after = zone
-    if (after != before) PgMessages.parameterStatus(currentOut, "TimeZone", after)
+    if (after != before) parameterStatus(currentOut, "TimeZone", after)
     r
   }
-
-  /** Run `body` (plan + row materialization) inside an [[Operation]] so the
-    * cancellable job group covers the Spark jobs actually launched while
-    * streaming results (reference ExecutorImpl.scala:111-146).
-    */
-  private def withOperation[T](label: String)(body: => T): T =
-    new Operation(session, label).run(body)
 
   /** Incremental (partition-at-a-time) vs full-collect result iteration
     * (reference ExecutorImpl.scala:185-215). Incremental is the default:
@@ -1564,24 +1487,6 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
       session.spark.conf.get("spark.graft.incrementalCollect", "true").toBoolean
     if (incremental) Internals.executeToIterator(df)
     else Internals.executeCollect(df).iterator
-  }
-
-  /** stream rows into currentOut; full chunks are flushed to the socket as
-    * they fill so result memory stays bounded regardless of result size
-    */
-  private def streamRows(df: DataFrame, schema: StructType, formats: Seq[Boolean],
-      maxRows: Int): Long = {
-    val writer = RowCodec.rowWriter(schema, formats, sessionZone)
-    val scratch = new Scratch
-    val it = resultIterator(df)
-    var n = 0L
-    while (it.hasNext && (maxRows == 0 || n < maxRows)) {
-      writeDataRow(currentOut, schema.length, writer, it.next(), scratch)
-      maybeFlush()
-      n += 1
-    }
-    ServerStats.rowsStreamed.addAndGet(n)
-    n
   }
 
   /** Hand a full chunk to the socket and continue on a fresh buffer —
@@ -1606,41 +1511,43 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
 
   private def sessionZone: java.time.ZoneId =
     java.time.ZoneId.of(session.spark.conf.get("spark.sql.session.timeZone", "UTC"))
+}
 
-  /** DataRow 'D': int16 column count then the RowCodec fields. The scratch
-    * buffer doubles on overflow so a single wide row (long text, big arrays)
-    * never fails the query; growth is bounded by PG's 1 GB field ceiling.
-    */
-  private def writeDataRow(out: ByteBuf, nCols: Int,
-      writer: (InternalRow, ByteBuffer) => Unit, row: InternalRow,
-      scratch: Scratch): Unit = {
+/** The one grow-on-overflow row encoder. `fields` writes a row's fields
+  * into a scratch buffer that doubles on overflow, so a single wide row
+  * (long text, big arrays) never fails the statement; growth is bounded by
+  * PG's 1 GB field ceiling. Each row then goes out as `tag`, the int32
+  * length, the int16 field count unless `nCols` < 0, and the fields: DataRow,
+  * binary and text COPY rows and FunctionCallResponse all frame this way.
+  */
+private final class RowFrames(tag: Char, nCols: Int,
+    fields: (InternalRow, ByteBuffer) => Unit) {
+  private var scratch = ByteBuffer.allocate(1 << 16)
+
+  def write(out: ByteBuf, row: InternalRow): Unit = {
     var done = false
     while (!done) {
-      val buf = scratch.buf
-      buf.clear()
-      try { writer(row, buf); done = true }
+      scratch.clear()
+      try { fields(row, scratch); done = true }
       catch {
         case _: java.nio.BufferOverflowException =>
-          if (buf.capacity() >= Scratch.MaxBytes) throw new IllegalStateException(
-            s"row exceeds the ${Scratch.MaxBytes} byte wire limit")
-          scratch.buf = ByteBuffer.allocate(buf.capacity() * 2)
+          if (scratch.capacity() >= RowFrames.MaxBytes) throw new IllegalStateException(
+            s"row exceeds the ${RowFrames.MaxBytes} byte wire limit")
+          scratch = ByteBuffer.allocate(scratch.capacity() * 2)
       }
     }
-    val buf = scratch.buf
-    buf.flip()
-    out.writeByte('D')
-    out.writeInt(4 + 2 + buf.remaining())
-    out.writeShort(nCols)
-    out.writeBytes(buf)
+    scratch.flip()
+    out.writeByte(tag)
+    if (nCols < 0) out.writeInt(4 + scratch.remaining())
+    else {
+      out.writeInt(4 + 2 + scratch.remaining())
+      out.writeShort(nCols)
+    }
+    out.writeBytes(scratch)
   }
 }
 
-/** grow-on-demand serialization buffer for DataRow fields */
-private final class Scratch {
-  var buf: ByteBuffer = ByteBuffer.allocate(1 << 20)
-}
-
-private object Scratch {
+private object RowFrames {
   val MaxBytes: Int = 1 << 30
 }
 

@@ -21,6 +21,11 @@ final case class StmtEvent(
 object ServerStats {
   val sessionsOpened = new AtomicLong
   val sessionsClosed = new AtomicLong
+  // the statement counters are fed only by Operation.run, the one place a
+  // statement runs: every statement once (simple-Query statements, including
+  // ones that fail to parse, first Executes, SQL FETCH/MOVE, COPY, fastpath
+  // calls), every one of them that failed, and the rows sent as DataRow or
+  // CopyData. Parse/Bind/Describe errors run no statement and count in none.
   val statementsRun = new AtomicLong
   val statementsFailed = new AtomicLong
   val rowsStreamed = new AtomicLong

@@ -343,6 +343,12 @@ class PgGucSuite extends AnyFunSuite with BeforeAndAfterAll {
       // EXPLAIN never executes the query in Spark: no mutation either
       c.simple("EXPLAIN SELECT set_config('statement_timeout', '9000', false)")
       assert(c.rows(c.simple("SHOW statement_timeout")) === Seq(Seq("1s")))
+      // nor EXPLAIN over the extended protocol, Execute included
+      c.parse("", "EXPLAIN SELECT set_config('statement_timeout', '9000', false)")
+      c.bind("", "")
+      c.execute("")
+      assert(c.sync().exists(_._1 == 'D'), "EXPLAIN answers its plan rows")
+      assert(c.rows(c.simple("SHOW statement_timeout")) === Seq(Seq("1s")))
       // executing the prepared statement applies it and echoes the value
       c.bind("", "S_setcfg")
       c.execute("")

@@ -546,6 +546,16 @@ class PgWireServerSuite extends AnyFunSuite with BeforeAndAfterAll {
     assert(b2.getInt === 4)
     assert(b2.getInt === 5)
 
+    // a result far over 64 KB comes back whole
+    val big = ("ab" * 50000).getBytes(UTF_8)
+    c.send('F', i32(oidOf("upper")) ++ i16(0) ++ i16(1) ++ i32(big.length) ++ big ++ i16(0))
+    val rBig = c.drainUntilReady()
+    val vBig = rBig.find(_._1 == 'V').getOrElse(fail(s"no FunctionCallResponse: ${rBig.map(_._1)}"))._2
+    val bBig = java.nio.ByteBuffer.wrap(vBig)
+    assert(bBig.getInt === 100000)
+    val sBig = new Array[Byte](100000); bBig.get(sBig)
+    assert(new String(sBig, UTF_8) === "AB" * 50000)
+
     // unknown OID: ErrorResponse then ReadyForQuery, connection survives
     c.send('F', i32(999999) ++ i16(0) ++ i16(0) ++ i16(0))
     val r3 = c.drainUntilReady()
@@ -631,6 +641,73 @@ class PgWireServerSuite extends AnyFunSuite with BeforeAndAfterAll {
     val after = psql("SELECT graft_stat('statements_run')").toLong
     assert(after > before)
     assert(psql("SELECT graft_stat('sessions_opened')").toLong > 0)
+
+    // exact deltas over one connection, one statement of every path
+    def i32(v: Int): Array[Byte] = java.nio.ByteBuffer.allocate(4).putInt(v).array()
+    def i16(v: Int): Array[Byte] = java.nio.ByteBuffer.allocate(2).putShort(v.toShort).array()
+    def counters = Seq(ServerStats.statementsRun.get, ServerStats.statementsFailed.get,
+      ServerStats.rowsStreamed.get)
+    val c = new RawClient
+    c.startup()
+    val start = counters
+    c.send('Q', c.cstr("SELECT id FROM range(3)")) // 1 statement, 3 rows
+    c.drainUntilReady()
+    c.send('P', c.cstr("") ++ c.cstr("SELECT 1 AS v") ++ i16(0)) // 1 statement, 1 row
+    c.send('B', c.cstr("") ++ c.cstr("") ++ i16(0) ++ i16(0) ++ i16(0))
+    c.send('E', c.cstr("") ++ i32(0))
+    c.sync()
+    c.send('Q', c.cstr("DECLARE cur CURSOR FOR SELECT id FROM range(4)")) // 1 statement
+    c.drainUntilReady()
+    c.send('Q', c.cstr("FETCH 3 FROM cur")) // 1 statement, 3 rows
+    c.drainUntilReady()
+    c.send('Q', c.cstr("COPY (SELECT id FROM range(2)) TO STDOUT")) // 1 statement, 2 rows
+    c.drainUntilReady()
+    // fastpath length('hello'): 1 statement, its value is no DataRow
+    val oid = graft.pg.PgCatalog.fastpathFunctions.find(_._2 == "length").get._1
+    c.send('F', i32(oid) ++ i16(0) ++ i16(1) ++ i32(5) ++ "hello".getBytes(UTF_8) ++ i16(0))
+    c.drainUntilReady()
+    c.send('Q', c.cstr("SELEC 1")) // 1 statement, failed
+    assert(c.drainUntilReady().exists(_._1 == 'E'))
+    val delta = counters.zip(start).map { case (a, b) => a - b }
+    assert(delta === Seq(7L, 1L, 9L), "statements_run, statements_failed, rows_streamed")
+    c.close()
+  }
+
+  test("analyses per flow: simple 1, extended 1, extended with parameters 3") {
+    val c = new RawClient
+    val (pid, _) = c.startupKeyData()
+    // the resolution hook set_config uses: the builder runs once per analysis
+    val analyses = new java.util.concurrent.atomic.AtomicInteger
+    org.apache.spark.sql.graft.Internals.registerExprFunction(
+      SessionRegistry.get(pid).get.spark, "count_analysis", _ => {
+        analyses.incrementAndGet()
+        org.apache.spark.sql.catalyst.expressions.Literal(1)
+      })
+    def analysesOf(body: => Unit): Int = {
+      val before = analyses.get
+      body
+      analyses.get - before
+    }
+    def extended(sql: String, params: Seq[String]): Unit = {
+      c.send('P', c.cstr("") ++ c.cstr(sql) ++ Array[Byte](0, 0))
+      val args = params.flatMap { p =>
+        val b = p.getBytes(UTF_8)
+        java.nio.ByteBuffer.allocate(4).putInt(b.length).array() ++ b
+      }
+      c.send('B', c.cstr("") ++ c.cstr("") ++ Array[Byte](0, 0) ++
+        java.nio.ByteBuffer.allocate(2).putShort(params.length.toShort).array() ++ args ++
+        Array[Byte](0, 0))
+      c.send('D', Array[Byte]('P'.toByte) ++ c.cstr(""))
+      c.send('E', c.cstr("") ++ Array[Byte](0, 0, 0, 0))
+      assert(c.sync().exists(_._1 == 'D'))
+    }
+    assert(analysesOf {
+      c.send('Q', c.cstr("SELECT count_analysis() AS v"))
+      assert(c.drainUntilReady().exists(_._1 == 'D'))
+    } === 1)
+    assert(analysesOf(extended("SELECT count_analysis() AS v", Nil)) === 1)
+    assert(analysesOf(extended("SELECT count_analysis() AS v, $1 AS p", Seq("x"))) === 3)
+    c.close()
   }
 
   test("operation lifecycle transitions") {

@@ -73,7 +73,7 @@ final class Operation(val session: PgSession, val statement: String,
     startedAt = System.currentTimeMillis()
     session.busy = true
     session.currentQuery = statement
-    session.activeJobGroup = jobGroup
+    session.activeOperation = this
     val sc = session.spark.sparkContext
     sc.setJobGroup(jobGroup, statement.take(80), interruptOnCancel = true)
     // per-session fair-scheduler pool so one heavy statement cannot starve
@@ -120,9 +120,14 @@ final class Operation(val session: PgSession, val statement: String,
     }
   }
 
+  /** The one cancel path (timeout, and every cancel through
+    * [[PgSession.cancel]]): cancels the running job and any this run would
+    * start after it (a result streams one job per wave, and a cancel may
+    * land between two).
+    */
   def cancel(): Unit = {
     if (state.compareAndSet(OpState.Running, OpState.Canceled)) {
-      session.spark.sparkContext.cancelJobGroup(jobGroup)
+      session.spark.sparkContext.cancelJobGroupAndFutureJobs(jobGroup)
     }
   }
 

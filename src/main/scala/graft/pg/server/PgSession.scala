@@ -136,11 +136,16 @@ final class PgSession(val pid: Int, val secret: Int, val spark: SparkSession,
     * (reference ExecutorImpl.scala:68-84).
     */
   def nextJobGroup(): String = s"pg-$pid-${stmtCounter.incrementAndGet()}"
-  @volatile var activeJobGroup: String = _
+  /** the statement running now, or the last one to run */
+  @volatile var activeOperation: Operation = _
 
+  /** CancelRequest, pg_cancel_backend/pg_terminate_backend and the idle
+    * reaper: cancels the running statement (SQLSTATE 57014) and every job
+    * it would start after this; a no-op when no statement runs.
+    */
   def cancel(): Unit = {
-    val g = activeJobGroup
-    if (g != null) spark.sparkContext.cancelJobGroup(g)
+    val op = activeOperation
+    if (op != null) op.cancel()
   }
 
   def close(): Unit = {

@@ -1192,9 +1192,17 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
         if (litParams.isEmpty) {
           stmt.takeAnalyzed().foreach(a => portal.df = Internals.ofRows(session.spark, a))
         }
-        portal.schema = resultSchema(stmt,
+        // otherwise a query's bound plan is analyzed once, here, and Execute
+        // runs that instance; volatile texts, commands and EXPLAIN analyze
+        // again at Execute, where their effects belong
+        val schema =
           if (portal.df != null) portal.df.schema
-          else Internals.analyzedSchema(session.spark, portal.bound))
+          else if (stmt.kind == StmtKind.Sql && !isVolatileText(stmt.sql)) {
+            val (schema, analyzed) = Internals.analyzeForPrepare(session.spark, portal.bound)
+            analyzed.foreach(a => portal.df = Internals.ofRows(session.spark, a))
+            schema
+          } else Internals.analyzedSchema(session.spark, portal.bound)
+        portal.schema = resultSchema(stmt, schema)
       case StmtKind.Fetch(cursor, _, true) =>
         session.portals.get(cursor).foreach(c => portal.schema = c.schema)
       case _ =>
@@ -1478,14 +1486,16 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     r
   }
 
-  /** Incremental (partition-at-a-time) vs full-collect result iteration
-    * (reference ExecutorImpl.scala:185-215). Incremental is the default:
-    * at 100 TB a full driver collect is fatal; cursor clients stream.
+  /** Incremental (one job per wave of partitions) vs full-collect result
+    * iteration (reference ExecutorImpl.scala:185-215). Incremental is the
+    * default: at 100 TB a full driver collect is fatal; cursor clients
+    * stream. Waves run here, on the handler thread inside the statement's
+    * Operation, so its job group, pool, timeout and cancel reach each one.
     */
   private def resultIterator(df: DataFrame): Iterator[InternalRow] = {
     val incremental =
       session.spark.conf.get("spark.graft.incrementalCollect", "true").toBoolean
-    if (incremental) Internals.executeToIterator(df)
+    if (incremental) Internals.executeInWaves(df)
     else Internals.executeCollect(df).iterator
   }
 

@@ -1,10 +1,19 @@
 package org.apache.spark.sql.graft
 
+import java.io.{DataInputStream, DataOutputStream}
+import java.nio.ByteBuffer
+
+import org.apache.spark.{SparkEnv, SparkException}
+import org.apache.spark.internal.config.MAX_RESULT_SIZE
+import org.apache.spark.io.CompressionCodec
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeRow}
 import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
+import org.apache.spark.sql.execution.{CommandResultExec, LocalTableScanExec, SparkPlan}
+import org.apache.spark.util.io.{ChunkedByteBuffer, ChunkedByteBufferOutputStream}
 
 /** Bridge to `private[sql]` Spark internals the engine needs: executing a
   * hand-built LogicalPlan (the reference does this via Dataset.ofRows,
@@ -41,6 +50,107 @@ object Internals {
   def executeToIterator(df: DataFrame): Iterator[org.apache.spark.sql.catalyst.InternalRow] =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
       .queryExecution.executedPlan.executeToIterator()
+
+  /** Result rows streamed one Spark job per WAVE of partitions. The plan
+    * executes once; each partition packs its rows as length-prefixed
+    * UnsafeRows through the session's codec (the format of SparkPlan's
+    * private getByteArrayRdd), and one synchronous job per wave of
+    * `min(remaining, defaultParallelism)` partitions fetches them, decoded
+    * lazily in partition order. `RDD.toLocalIterator` instead runs one job
+    * per partition, one after another. A wave starts only when the previous
+    * one is drained, on the calling thread, so its job carries that thread's
+    * job group and pool, and a suspended consumer holds no running job. The
+    * driver holds at most one wave. Spark aborts a job whose results pass
+    * `spark.driver.maxResultSize`; such a wave of several partitions runs
+    * again at half the width, which then holds for the rest of the result,
+    * so a result streams whenever each of its partitions fits the limit.
+    * Roots whose rows already sit on the driver (command results, local
+    * relations) answer with no job.
+    */
+  def executeInWaves(df: DataFrame): Iterator[InternalRow] =
+    df.asInstanceOf[CDataset[org.apache.spark.sql.Row]].queryExecution.executedPlan match {
+      case p @ (_: CommandResultExec | _: LocalTableScanExec) => p.executeCollect().iterator
+      case p => new Waves(p)
+    }
+
+  private final class Waves(plan: SparkPlan) extends Iterator[InternalRow] {
+    private val packed = plan.execute().mapPartitionsInternal(packRows)
+    private val sc = packed.sparkContext
+    private val nFields = plan.schema.length
+    private val total = packed.partitions.length
+    private var width = sc.defaultParallelism
+    private var fetched = 0
+    private var rows: Iterator[InternalRow] = Iterator.empty
+
+    def hasNext: Boolean = {
+      while (!rows.hasNext && fetched < total) {
+        rows = Iterator.empty // drop the drained wave before fetching the next
+        rows = decode(fetchWave())
+      }
+      rows.hasNext
+    }
+
+    def next(): InternalRow =
+      if (hasNext) rows.next() else throw new NoSuchElementException("end of result")
+
+    private def fetchWave(): Array[ChunkedByteBuffer] = {
+      val n = math.min(total - fetched, width)
+      try {
+        val wave = sc.runJob(packed, (it: Iterator[ChunkedByteBuffer]) => it.next(),
+          fetched until fetched + n)
+        fetched += n
+        wave
+      } catch {
+        case e: SparkException if n > 1 && exceedsMaxResultSize(e) =>
+          width = n / 2 // the job only reads; shuffle outputs are reused
+          fetchWave()
+      }
+    }
+
+    private def decode(wave: Array[ChunkedByteBuffer]): Iterator[InternalRow] =
+      wave.indices.iterator.flatMap { i =>
+        val bytes = wave(i)
+        wave(i) = null // release each partition's bytes once its rows decode
+        decodeRows(bytes, nFields)
+      }
+  }
+
+  private def exceedsMaxResultSize(e: SparkException): Boolean =
+    Option(e.getMessage).exists(_.contains(s"is bigger than ${MAX_RESULT_SIZE.key}"))
+
+  private def packRows(rows: Iterator[InternalRow]): Iterator[ChunkedByteBuffer] = {
+    val codec = CompressionCodec.createCodec(SparkEnv.get.conf)
+    val bytes = new ChunkedByteBufferOutputStream(1024 * 1024, ByteBuffer.allocate)
+    val out = new DataOutputStream(codec.compressedOutputStream(bytes))
+    val scratch = new Array[Byte](4 << 10)
+    while (rows.hasNext) {
+      val row = rows.next().asInstanceOf[UnsafeRow]
+      out.writeInt(row.getSizeInBytes)
+      row.writeToStream(out, scratch)
+    }
+    out.writeInt(-1)
+    out.close()
+    Iterator(bytes.toChunkedByteBuffer)
+  }
+
+  private def decodeRows(bytes: ChunkedByteBuffer, nFields: Int): Iterator[InternalRow] = {
+    val codec = CompressionCodec.createCodec(SparkEnv.get.conf)
+    val in = new DataInputStream(codec.compressedInputStream(bytes.toInputStream()))
+    new Iterator[InternalRow] {
+      private var rowBytes = in.readInt()
+      def hasNext: Boolean = rowBytes >= 0
+      def next(): InternalRow = {
+        if (rowBytes < 0) throw new NoSuchElementException("end of partition")
+        val b = new Array[Byte](rowBytes)
+        in.readFully(b)
+        val row = new UnsafeRow(nFields)
+        row.pointTo(b, rowBytes)
+        rowBytes = in.readInt()
+        if (rowBytes < 0) in.close()
+        row
+      }
+    }
+  }
 
   /** One-shot collect of InternalRows (cursor-re-entrant mode). */
   def executeCollect(df: DataFrame): Array[org.apache.spark.sql.catalyst.InternalRow] =

@@ -125,7 +125,8 @@ class PgBoundedHeapSuite extends AnyFunSuite {
   test("480MB result streams through a server JVM pinned to -Xmx512m") {
     withForkedServer("boundedheap") { (in, os) =>
       // 4M rows x (id + 100-char pad) ~ 480 MB of DataRow payload; 32 input
-      // partitions so the incremental iterator holds ~15 MB at a time
+      // partitions on 4 cores, so the driver holds one wave: the packed rows
+      // of 4 partitions, ~15 MB each before compression
       sendQuery(os,
         "SELECT id, repeat('x', 100) AS pad FROM range(0, 4000000, 1, 32)")
       val (rows, bytes, tag, err) = drainResult(in)
@@ -139,6 +140,27 @@ class PgBoundedHeapSuite extends AnyFunSuite {
       val (probeRows, _, _, probeErr) = drainResult(in)
       assert(probeErr == null && probeRows == 1,
         "server must stay healthy after the 480MB stream")
+    }
+  }
+
+  test("a result whose full wave would pass spark.driver.maxResultSize still streams") {
+    // a partition of 50k hex rows packs to ~3.2 MB (lz4 gains little on
+    // hex), so one partition fits a 10 MB maxResultSize but a wave of all 4
+    // cores' partitions (~12.8 MB) fails its job. The second input's first
+    // two waves are empty (the filter keeps partitions 8-15 only), so a
+    // wave sized from the bytes seen so far would fail it as well.
+    withForkedServer("maxresult", Seq("-Dspark.driver.maxResultSize=10m")) { (in, os) =>
+      for (sql <- Seq(
+          "SELECT sha2(CAST(id AS STRING), 256) AS h FROM range(0, 400000, 1, 8)",
+          "SELECT sha2(CAST(id AS STRING), 256) AS h FROM range(0, 800000, 1, 16) " +
+            "WHERE id >= 400000")) {
+        sendQuery(os, sql)
+        val (rows, bytes, tag, err) = drainResult(in)
+        assert(err == null, s"server errored mid-stream: $err ($sql)")
+        assert(rows === 400000L, s"row count $rows ($sql)")
+        assert(bytes === 400000L * (2 + 4 + 64), s"DataRow payload $bytes ($sql)")
+        assert(tag != null && tag.contains("SELECT 400000"), s"tag was $tag ($sql)")
+      }
     }
   }
 

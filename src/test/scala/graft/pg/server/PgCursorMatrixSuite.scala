@@ -14,10 +14,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The cursor fetchSize × incrementalCollect matrix the reference verifies
   * with the real pgjdbc jar (reference TEST/PgJdbcSuite.scala:1144-1226):
-  * all four cells — {full collect, incremental partition-at-a-time} ×
-  * {fetchSize 0 = drain, fetchSize 7 = portal suspension loop} — must
-  * return the IDENTICAL ordered rows, with the correct PortalSuspended /
-  * CommandComplete cadence. incrementalCollect only changes how the server
+  * all four cells — {full collect, incremental one job per wave of
+  * partitions} × {fetchSize 0 = drain, fetchSize 7 = portal suspension
+  * loop} — must return the IDENTICAL ordered rows, with the correct
+  * PortalSuspended / CommandComplete cadence, for a sorted single-partition
+  * result and for one spanning three waves, whose boundaries a 7-row
+  * suspension loop crosses mid-portal. incrementalCollect only changes how the server
   * materializes (driver collect vs executor-side iterator); the wire
   * contract may not move. Each cell runs on a fresh connection with the
   * session-local `SET spark.graft.incrementalCollect` applied first.
@@ -100,17 +102,21 @@ class PgCursorMatrixSuite extends AnyFunSuite with BeforeAndAfterAll {
     def types(msgs: Seq[(Char, Array[Byte])]): String = msgs.map(_._1).mkString
   }
 
-  private val Sql = "SELECT id FROM range(100) ORDER BY id"
-  private val Expected: Seq[String] = (0 until 100).map(_.toString)
+  /** (text, its ordered rows): 24 partitions are three waves of the
+    * suite's local[8]
+    */
+  private val Inputs: Seq[(String, Seq[String])] = Seq(
+    "SELECT id FROM range(100) ORDER BY id" -> (0 until 100).map(_.toString),
+    "SELECT id FROM range(0, 1000, 1, 24)" -> (0 until 1000).map(_.toString))
 
   /** One matrix cell: returns (orderedRows, suspendedRounds). */
-  private def runCell(incremental: Boolean, fetchSize: Int): (Seq[String], Int) = {
+  private def runCell(incremental: Boolean, fetchSize: Int, sql: String): (Seq[String], Int) = {
     val c = new RawClient
     c.connect()
     try {
       val set = c.simpleQuery(s"SET spark.graft.incrementalCollect=$incremental")
       assert(set.exists(_._1 == 'C'), s"SET must complete: ${c.types(set)}")
-      c.parse("S_m", Sql)
+      c.parse("S_m", sql)
       c.bind("curs", "S_m")
       c.sync()
       val all = mutable.ArrayBuffer.empty[String]
@@ -132,21 +138,27 @@ class PgCursorMatrixSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   for (incremental <- Seq(true, false); fetchSize <- Seq(0, 7)) {
     test(s"incrementalCollect=$incremental fetchSize=$fetchSize: identical rows, correct cadence") {
-      val (rows, suspensions) = runCell(incremental, fetchSize)
-      assert(rows == Expected,
-        s"cell must return the full ordered result (got ${rows.size} rows)")
-      if (fetchSize == 0) {
-        assert(suspensions == 0, "a drain Execute never suspends")
-      } else {
-        // 100 rows at 7/round: 14 suspended rounds then a final short round
-        assert(suspensions == 14,
-          s"7-row fetch over 100 rows suspends 14 times, got $suspensions")
+      for ((sql, expected) <- Inputs) {
+        val (rows, suspensions) = runCell(incremental, fetchSize, sql)
+        assert(rows == expected,
+          s"cell must return the full ordered result of $sql (got ${rows.size} rows)")
+        if (fetchSize == 0) {
+          assert(suspensions == 0, "a drain Execute never suspends")
+        } else {
+          // n rows at 7/round: (n - 1) / 7 suspended rounds then a final
+          // short round (100 rows: 14, 1000 rows: 142)
+          val want = (expected.size - 1) / fetchSize
+          assert(suspensions == want,
+            s"7-row fetch over ${expected.size} rows suspends $want times, got $suspensions")
+        }
       }
     }
   }
 
   test("all four cells agree cell-to-cell (wire contract independent of collect mode)") {
-    val cells = for (inc <- Seq(true, false); fs <- Seq(0, 7)) yield runCell(inc, fs)._1
-    assert(cells.distinct.size == 1, "every cell must return identical rows")
+    for ((sql, _) <- Inputs) {
+      val cells = for (inc <- Seq(true, false); fs <- Seq(0, 7)) yield runCell(inc, fs, sql)._1
+      assert(cells.distinct.size == 1, s"every cell must return identical rows of $sql")
+    }
   }
 }

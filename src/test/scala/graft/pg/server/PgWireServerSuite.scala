@@ -305,22 +305,48 @@ class PgWireServerSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   test("statement_timeout cancels the statement with SQLSTATE 57014") {
     val c = new RawClient
-    c.startup()
+    val (pid, secret) = c.startupKeyData()
     c.send('Q', c.cstr("SET statement_timeout=1200"))
     c.drainUntilReady()
-    val t0 = System.currentTimeMillis()
-    // >>1.2s uncancelled
-    c.send('Q', c.cstr("SELECT max(id * 2 + 1) FROM range(200000000000)"))
-    val msgs = c.drainUntilReady()
-    val elapsed = System.currentTimeMillis() - t0
-    val err = msgs.find(_._1 == 'E')
-    assert(err.isDefined, "timed-out statement must surface an ErrorResponse")
-    assert(sqlStateOf(err.get._2) === "57014", "PG query_canceled SQLSTATE")
-    assert(new String(err.get._2, UTF_8).contains("statement timeout"))
-    assert(elapsed < 30000, s"timeout fired too late: ${elapsed}ms")
-    // 0 disables; the session is healthy
+    val tracker = TestSpark.spark.sparkContext.statusTracker
+    /** run `sql`, let `cancel` stop it, expect 57014 and no job left running */
+    def canceled(sql: String, message: String)(cancel: => Unit): Unit = {
+      val t0 = System.currentTimeMillis()
+      c.send('Q', c.cstr(sql))
+      cancel
+      val msgs = c.drainUntilReady()
+      val elapsed = System.currentTimeMillis() - t0
+      val err = msgs.find(_._1 == 'E')
+      assert(err.isDefined, s"canceled statement must surface an ErrorResponse: $sql")
+      assert(sqlStateOf(err.get._2) === "57014", "PG query_canceled SQLSTATE")
+      assert(new String(err.get._2, UTF_8).contains(message))
+      assert(elapsed < 30000, s"cancel took effect too late: ${elapsed}ms")
+      // no job of the canceled statement runs on (the tracker lags a little)
+      val group = SessionRegistry.get(pid).get.activeOperation.jobGroup
+      def running = tracker.getJobIdsForGroup(group).toSeq.filter(id =>
+        tracker.getJobInfo(id).exists(_.status == org.apache.spark.JobExecutionStatus.RUNNING))
+      val deadline = System.currentTimeMillis() + 10000
+      while ((tracker.getJobIdsForGroup(group).isEmpty || running.nonEmpty) &&
+          System.currentTimeMillis() < deadline) Thread.sleep(100)
+      assert(tracker.getJobIdsForGroup(group).nonEmpty, s"no job recorded for $group")
+      assert(running.isEmpty, s"jobs of $group still running after the cancel: $sql")
+    }
+    // >>1.2s uncancelled: one aggregate, then a filter whose result would
+    // stream over many waves of its 32 partitions
+    val multiWave = "SELECT id FROM range(0, 200000000000, 1, 32) WHERE id * 2 + 1 < 0"
+    for (sql <- Seq("SELECT max(id * 2 + 1) FROM range(200000000000)", multiWave))
+      canceled(sql, "statement timeout")(())
+    // 0 disables; a client CancelRequest stops the multi-wave statement too
     c.send('Q', c.cstr("SET statement_timeout=0"))
     c.drainUntilReady()
+    canceled(multiWave, "user request") {
+      Thread.sleep(1500)
+      val cs = new Socket("127.0.0.1", port)
+      val os = new DataOutputStream(cs.getOutputStream)
+      os.writeInt(16); os.writeInt(80877102); os.writeInt(pid); os.writeInt(secret)
+      os.flush(); cs.close()
+    }
+    // the session is healthy
     c.send('Q', c.cstr("SELECT 3"))
     assert(c.drainUntilReady().exists(_._1 == 'D'))
     c.close()
@@ -673,7 +699,7 @@ class PgWireServerSuite extends AnyFunSuite with BeforeAndAfterAll {
     c.close()
   }
 
-  test("analyses per flow: simple 1, extended 1, extended with parameters 3") {
+  test("analyses per flow: simple 1, extended 1, extended with parameters 2, re-Execute 1") {
     val c = new RawClient
     val (pid, _) = c.startupKeyData()
     // the resolution hook set_config uses: the builder runs once per analysis
@@ -688,13 +714,13 @@ class PgWireServerSuite extends AnyFunSuite with BeforeAndAfterAll {
       body
       analyses.get - before
     }
-    def extended(sql: String, params: Seq[String]): Unit = {
-      c.send('P', c.cstr("") ++ c.cstr(sql) ++ Array[Byte](0, 0))
+    def extended(sql: String, params: Seq[String], stmt: String = ""): Unit = {
+      if (sql != null) c.send('P', c.cstr(stmt) ++ c.cstr(sql) ++ Array[Byte](0, 0))
       val args = params.flatMap { p =>
         val b = p.getBytes(UTF_8)
         java.nio.ByteBuffer.allocate(4).putInt(b.length).array() ++ b
       }
-      c.send('B', c.cstr("") ++ c.cstr("") ++ Array[Byte](0, 0) ++
+      c.send('B', c.cstr("") ++ c.cstr(stmt) ++ Array[Byte](0, 0) ++
         java.nio.ByteBuffer.allocate(2).putShort(params.length.toShort).array() ++ args ++
         Array[Byte](0, 0))
       c.send('D', Array[Byte]('P'.toByte) ++ c.cstr(""))
@@ -706,8 +732,69 @@ class PgWireServerSuite extends AnyFunSuite with BeforeAndAfterAll {
       assert(c.drainUntilReady().exists(_._1 == 'D'))
     } === 1)
     assert(analysesOf(extended("SELECT count_analysis() AS v", Nil)) === 1)
-    assert(analysesOf(extended("SELECT count_analysis() AS v, $1 AS p", Seq("x"))) === 3)
+    // Parse analyzes for Describe, Bind analyzes the bound plan once and
+    // Execute runs that instance
+    assert(analysesOf(extended("SELECT count_analysis() AS v, $1 AS p", Seq("x"))) === 2)
+    // a named statement's later Bind/Execute costs only Bind's analysis
+    extended("SELECT count_analysis() AS v, $1 AS p", Seq("x"), stmt = "S_n")
+    assert(analysesOf(extended(null, Seq("y"), stmt = "S_n")) === 1)
     c.close()
+  }
+
+  test("jobs per statement: one job per wave of partitions, none for driver-side rows") {
+    val c = new RawClient
+    val (pid, _) = c.startupKeyData()
+    val sc = TestSpark.spark.sparkContext
+    // this connection's jobs: its statements' job groups are pg-<pid>-<n>
+    val running = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && Option(e.properties.getProperty("spark.jobGroup.id"))
+            .exists(_.startsWith(s"pg-$pid-"))) {
+          running.add(e.jobId)
+          started.incrementAndGet()
+        }
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        running.remove(e.jobId)
+    }
+    /** the jobs one simple Query ran, once the listener bus has delivered
+      * them: every job ended and the count still for 300 ms
+      */
+    def jobsOf(sql: String): (Int, Seq[String]) = {
+      val before = started.get
+      c.send('Q', c.cstr(sql))
+      val msgs = c.drainUntilReady()
+      assert(!msgs.exists(_._1 == 'E'), s"$sql failed")
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      var seen = -1
+      while ((seen != started.get || !running.isEmpty) &&
+          System.nanoTime() < deadline) {
+        seen = started.get
+        Thread.sleep(300)
+      }
+      (started.get - before, msgs.filter(_._1 == 'D').map(m => dataCells(m._2).head))
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_jobs_lookup").toString
+    sc.addSparkListener(listener)
+    try {
+      TestSpark.spark.range(0, 4000, 1, 4).write.mode("overwrite").parquet(dir)
+      val files = new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
+      assert(files >= 4, s"lookup table must span >= 4 files, has $files")
+      // a view resolves the files' schema once, so the lookup infers none
+      jobsOf(s"CREATE TEMPORARY VIEW jobs_lookup USING parquet OPTIONS (path '$dir')")
+      assert(jobsOf("SELECT id FROM jobs_lookup WHERE id = 42") === ((1, Seq("42"))))
+      val parts = 3 * sc.defaultParallelism
+      assert(jobsOf(s"SELECT id FROM range(0, 1000, 1, $parts)") ===
+        ((3, (0 until 1000).map(_.toString))))
+      assert(jobsOf("SELECT nspname FROM pg_namespace")._1 === 0)
+      assert(jobsOf("SET x = y")._1 === 0)
+      assert(jobsOf("SHOW TimeZone")._1 === 0)
+    } finally {
+      sc.removeSparkListener(listener)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      c.close()
+    }
   }
 
   test("operation lifecycle transitions") {
